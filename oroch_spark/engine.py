@@ -1171,11 +1171,45 @@ def _encode_chunk(table: "pa.Table", bucket: int, block_idx: int,
     }
 
 
+class DuplicateKeyError(ValueError):
+    """Two input rows of a ``unique_keys`` encode share a key."""
+
+
+def duplicate_key_in(exc: BaseException) -> Optional[str]:
+    """The repr of the key a ``unique_keys`` encode rejected, when
+    ``exc`` is the ``PythonException`` its :class:`DuplicateKeyError`
+    caused in a Spark Python worker; None for any other failure."""
+    m = re.search(r"DuplicateKeyError: duplicate key (.*)", str(exc))
+    return m.group(1) if m else None
+
+
+def _first_dup_row(keys: "pa.Table") -> int:
+    """Index of the first row whose key equals the next row's, or -1.
+    NULL equals NULL and NaN equals NaN, as in ``groupBy``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = keys.num_rows
+    if n < 2:
+        return -1
+    same = None
+    for col in keys.columns:
+        x, y = col.slice(0, n - 1), col.slice(1)
+        eq = pc.or_(pc.fill_null(pc.equal(x, y), False),
+                    pc.and_(pc.is_null(x), pc.is_null(y)))
+        if pa.types.is_floating(col.type):
+            eq = pc.or_(eq, pc.fill_null(
+                pc.and_(pc.is_nan(x), pc.is_nan(y)), False))
+        same = eq if same is None else pc.and_(same, eq)
+    return pc.index(same, True).as_py()
+
+
 def make_encode_fn(kinds: list[tuple[str, str]], key_cols: list[str],
                    block_rows: int, text_cols: frozenset[str],
                    bloom_cols: frozenset = frozenset(),
                    token_bloom_cols: frozenset = frozenset(),
-                   sketch_cols: frozenset = frozenset()):
+                   sketch_cols: frozenset = frozenset(),
+                   unique_keys: bool = False):
     """Streaming mapInArrow encode kernel.
 
     Input partitions are hash-distributed by ``_bucket`` and sorted by
@@ -1184,7 +1218,13 @@ def make_encode_fn(kinds: list[tuple[str, str]], key_cols: list[str],
     zero-copy RecordBatch slices at a time — executor memory is bounded
     by the block size, never by the bucket/partition size (the 100 TB
     constraint: a partition can be arbitrarily large, Arrow streams it
-    in ~10k-row batches). No pandas object arrays are ever created."""
+    in ~10k-row batches). No pandas object arrays are ever created.
+
+    ``unique_keys`` raises :class:`DuplicateKeyError` when two rows
+    share a key. Equal keys hash to the same bucket and sort next to
+    each other, so comparing neighbouring rows of each block, plus a
+    block's first row with the previous block's last row in the same
+    bucket, sees every duplicate."""
 
     def encode_stream(batches) -> Iterator["pa.RecordBatch"]:
         import pyarrow as pa
@@ -1200,12 +1240,27 @@ def make_encode_fn(kinds: list[tuple[str, str]], key_cols: list[str],
         # by count AND payload bytes so memory stays O(few blocks).
         pending: list[dict] = []
         pending_bytes = 0
+        # last key row of the previous block in cur_bucket
+        prev_key: Optional[pa.Table] = None
+
+        def check_unique(table):
+            nonlocal prev_key
+            keys = table.select(key_cols)
+            if prev_key is not None:
+                keys = pa.concat_tables([prev_key, keys])
+            i = _first_dup_row(keys)
+            if i >= 0:
+                key = tuple(keys.column(c)[i].as_py() for c in key_cols)
+                raise DuplicateKeyError(f"duplicate key {key!r}")
+            prev_key = keys.slice(keys.num_rows - 1)
 
         def flush():
             nonlocal buf, buffered, block_idx, pending_bytes
             if not buffered:
                 return
             table = pa.Table.from_batches(buf)
+            if unique_keys:
+                check_unique(table)
             row = _encode_chunk(table, cur_bucket, block_idx,
                                 kinds, key_cols, text_cols,
                                 bloom_cols, token_bloom_cols,
@@ -1234,6 +1289,7 @@ def make_encode_fn(kinds: list[tuple[str, str]], key_cols: list[str],
                     flush()
                     cur_bucket = int(bvals[0])
                     block_idx = 0
+                    prev_key = None
                     continue
                 take = min(run, block_rows - buffered)
                 buf.append(batch.slice(0, take))  # zero-copy
@@ -1327,7 +1383,8 @@ def encode_df(df: DataFrame, key_cols: list[str], n_buckets: int = 32,
               bucket_filter: Optional[list[int]] = None,
               bloom_cols: Optional[list[str]] = None,
               token_bloom_cols: Optional[list[str]] = None,
-              sketch_cols: Optional[list[str]] = None) -> DataFrame:
+              sketch_cols: Optional[list[str]] = None,
+              unique_keys: bool = False) -> DataFrame:
     """Encode a DataFrame into the blocks table. Lazy — returns the
     blocks DataFrame; callers write/aggregate it. ``token_bloom_cols``
     names string columns that additionally store a per-block Bloom
@@ -1335,7 +1392,15 @@ def encode_df(df: DataFrame, key_cols: list[str], n_buckets: int = 32,
     full-text block skipping for needle-in-100TB searches).
     ``sketch_cols`` names columns that store per-block HLL (+ quantile
     summaries for int-domain kinds) powering :func:`approx_distinct`
-    and :func:`approx_quantile` at metadata speed."""
+    and :func:`approx_quantile` at metadata speed.
+
+    ``n_buckets`` sets the hash domain, and so the blocks; the number
+    of encode tasks is left to adaptive query execution, which
+    coalesces a small shuffle into one task. With AQE off the
+    exchange falls back to ``spark.sql.shuffle.partitions``
+    partitions. Internal: ``unique_keys`` makes the job fail with
+    :class:`DuplicateKeyError` when two rows share ``key_cols`` (see
+    :func:`make_encode_fn`)."""
     kinds = column_kinds(df.schema)
     conv_col = key_cols[0]
     order_col = key_cols[1] if len(key_cols) > 1 else None
@@ -1346,10 +1411,11 @@ def encode_df(df: DataFrame, key_cols: list[str], n_buckets: int = 32,
     fn = make_encode_fn(kinds, key_cols, block_rows, text_cols,
                         frozenset(bloom_cols or []),
                         frozenset(token_bloom_cols or []),
-                        frozenset(sketch_cols or []))
-    # One shuffle (repartition by bucket) + in-partition sort; the encode
-    # kernel then streams Arrow batches with O(block_rows) memory.
-    df = (df.repartition(n_buckets, F.col("_bucket"))
+                        frozenset(sketch_cols or []), unique_keys)
+    # One shuffle (repartition by bucket, AQE-sized) + in-partition
+    # sort; the encode kernel then streams Arrow batches with
+    # O(block_rows) memory and cuts a block wherever the bucket changes.
+    df = (df.repartition(F.col("_bucket"))
             .sortWithinPartitions("_bucket", *key_cols))
     return df.mapInArrow(fn, schema=BLOCK_SCHEMA)
 

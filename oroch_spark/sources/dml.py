@@ -27,9 +27,13 @@ batch (or, for vacuum, pure file GC):
   batch pull complementing the push-style ``readStream`` source.
 
 Scale shape: every verb's driver-side work is O(batches) manifest JSON
-plus one Spark job; rows never collect. ``delete_where`` writes only
-(key, tombstone) rows — deleting a billion rows ships 16-ish bytes per
-key, not the rows.
+plus Spark jobs; rows never collect. ``upsert`` is ONE Spark job that
+reads its input once: the encode kernel rejects duplicate keys on the
+rows it already sorts by key. Its shuffle is sized by adaptive query
+execution, so a small upsert runs as one encode task and writes one
+part file.
+``delete_where`` writes only (key, tombstone) rows — deleting a
+billion rows ships 16-ish bytes per key, not the rows.
 
 Concurrency: every commit (DML, stream batch, compaction) serializes on
 the table write lock and allocates table batch id = max + 1; the stream
@@ -44,12 +48,14 @@ from __future__ import annotations
 
 import glob
 import json
+import logging
 import os
 import shutil
 import time
 import uuid
 from typing import Optional
 
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from .. import engine
@@ -64,6 +70,8 @@ from .datasource import (
     stream_sink_blocks,
     write_sidecar,
 )
+
+log = logging.getLogger("oroch_spark")
 
 
 def _require_sink(path: str) -> None:
@@ -138,13 +146,33 @@ def _commit_rows(spark, path: str, df, kinds: list[tuple[str, str]],
     """Encode ``df`` (already conformed to ``kinds``) and publish it as
     ONE new batch manifest with id = max + 1, under the table lock.
     Files land with stream-part-style unique names so every existing
-    sweep/GC rule applies to them unchanged."""
+    sweep/GC rule applies to them unchanged.
+
+    Latest-wins totality rests on per-batch key uniqueness
+    (incremental.read_latest ranks by batch id alone): two versions of
+    a key in ONE batch would resolve nondeterministically. The encode
+    kernel checks it on the sorted rows it encodes, in the same job; a
+    duplicate fails the job before anything is published."""
+    t0 = time.time()
     text_cols = [n for n, k in kinds if k == "str"]
     tmp_dir = os.path.join(path, f".dml-{uuid.uuid4().hex}")
     try:
-        engine.encode_df(df, key_cols, n_buckets=n_buckets,
-                         block_rows=block_rows, text_cols=text_cols) \
-            .write.mode("overwrite").parquet(tmp_dir)
+        try:
+            engine.encode_df(df, key_cols, n_buckets=n_buckets,
+                             block_rows=block_rows, text_cols=text_cols,
+                             unique_keys=True) \
+                .write.mode("overwrite").parquet(tmp_dir)
+        except PythonException as e:
+            key = engine.duplicate_key_in(e)
+            if key is None:
+                raise
+            # from None: the caller gets the key and the fix, not the
+            # Python worker's traceback wrapped in a Spark job failure
+            raise ValueError(
+                f"{note} frame holds more than one row for key {key} — "
+                "a batch is one consistent snapshot of its keys; "
+                "dropDuplicates or pre-aggregate to one row per key "
+                "first") from None
         files = []
         n_blocks = 0
         for f in sorted(glob.glob(os.path.join(tmp_dir, "*.parquet"))):
@@ -179,6 +207,8 @@ def _commit_rows(spark, path: str, df, kinds: list[tuple[str, str]],
         _publish_version(path, sorted(
             {os.path.basename(m) for m in _manifest_paths(path)}
             | {man_name}))
+    log.info("%s committed batch %d: blocks=%d files=%d wall_s=%.2f",
+             note, bid, n_blocks, len(files), time.time() - t0)
     return man
 
 
@@ -198,28 +228,11 @@ def upsert(spark, path: str, df, n_buckets: int = 8,
         if tombstone_col not in dict(kinds):
             raise ValueError(f"table has no column {tombstone_col!r}")
         df = df.withColumn(tombstone_col, F.lit(False))
-    # cache: the frame is executed twice (uniqueness check + encode);
-    # a non-deterministic source could otherwise PASS the check and
-    # still encode duplicate keys — exactly the nondeterminism the
-    # check exists to prevent
-    df = _conform(df, kinds).cache()
-    try:
-        # latest-wins totality rests on per-batch key uniqueness
-        # (incremental.read_latest ranks by batch id alone): two
-        # versions of a key in ONE batch would resolve
-        # nondeterministically
-        dup = (df.groupBy(*key_cols).count()
-               .filter(F.col("count") > 1).limit(1).collect())
-        if dup:
-            raise ValueError(
-                f"upsert frame holds {dup[0]['count']} rows for key "
-                f"{tuple(dup[0][c] for c in key_cols)} — a batch is "
-                "one consistent snapshot of its keys; dropDuplicates "
-                "or pre-aggregate to one row per key first")
-        return _commit_rows(spark, path, df, kinds,
-                            key_cols, n_buckets, block_rows, "upsert")
-    finally:
-        df.unpersist()
+    # one pass: the encode kernel checks key uniqueness on exactly the
+    # rows it encodes, so a non-deterministic source cannot pass the
+    # check and still commit duplicate keys
+    return _commit_rows(spark, path, _conform(df, kinds), kinds,
+                        key_cols, n_buckets, block_rows, "upsert")
 
 
 def delete_where(spark, path: str, predicate: str,

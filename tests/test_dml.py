@@ -531,3 +531,98 @@ def test_table_changes_below_compaction_horizon_raises(spark, sink):
     assert {r["k"] for r in feed.collect()} == {2}
     allfeed = dml.table_changes(spark, sink, from_batch=-1)
     assert allfeed.count() == 20  # every live key an insert
+
+
+CONV_SCHEMA = "conv_id string, turn_idx int, text string"
+
+
+@pytest.fixture()
+def conv_sink(spark, tmp_path):
+    """Transcript-shaped sink keyed on (conv_id, turn_idx)."""
+    ds.register(spark)
+    srcdir = str(tmp_path / "in")
+    spark.createDataFrame(
+        [Row(conv_id=f"c{i:03d}", turn_idx=t, text=f"t{i}.{t}")
+         for i in range(6) for t in range(4)], CONV_SCHEMA) \
+        .coalesce(1).write.parquet(os.path.join(srcdir, "f0"))
+    path = str(tmp_path / "out")
+    q = (spark.readStream.schema(CONV_SCHEMA).parquet(srcdir + "/*")
+         .writeStream.format("oroch")
+         .option("path", path).option("key_cols", "conv_id,turn_idx")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    return path
+
+
+def _conv_state(spark, path):
+    """Everything a rejected upsert must leave untouched."""
+    with open(os.path.join(path, ds._BATCH_DIR, ds._VERSION_FILE)) as f:
+        version = f.read()
+    lat = (spark.read.format("oroch").option("latest_wins", "true")
+           .load(path).collect())
+    return (dml._batch_ids(path), version,
+            sorted((r.conv_id, r.turn_idx, r.text) for r in lat))
+
+
+def _dup_frames(spark):
+    one = spark.createDataFrame(
+        [Row(conv_id="c001", turn_idx=2, text="x"),
+         Row(conv_id="c009", turn_idx=0, text="new"),
+         Row(conv_id="c001", turn_idx=2, text="y")], CONV_SCHEMA)
+    edits = spark.createDataFrame(
+        [Row(conv_id=f"c{i:03d}", turn_idx=t, text="edit")
+         for i in range(6) for t in range(4)], CONV_SCHEMA)
+    nulls = spark.createDataFrame(
+        [Row(conv_id=None, turn_idx=None, text="a"),
+         Row(conv_id="c002", turn_idx=1, text="b"),
+         Row(conv_id=None, turn_idx=None, text="c")], CONV_SCHEMA)
+    return {
+        # both copies in one input partition
+        "one_partition": (one.coalesce(1), "('c001', 2)"),
+        # copies in different input partitions
+        "across_partitions": (
+            edits.unionByName(edits.filter("conv_id = 'c003' AND "
+                                           "turn_idx = 1")).repartition(4),
+            "('c003', 1)"),
+        # NULL keys are equal, as in groupBy
+        "null_keys": (nulls, "(None, None)"),
+    }
+
+
+@pytest.mark.parametrize("case", ["one_partition", "across_partitions",
+                                  "null_keys"])
+def test_upsert_rejects_duplicate_keys(spark, conv_sink, case):
+    df, key = _dup_frames(spark)[case]
+    before = _conv_state(spark, conv_sink)
+    with pytest.raises(ValueError) as e:
+        dml.upsert(spark, conv_sink, df)
+    # a plain ValueError naming the key and the fix, not a wrapped
+    # Python-worker failure
+    assert type(e.value) is ValueError
+    msg = str(e.value)
+    assert f"for key {key} " in msg and "Traceback" not in msg
+    assert "dropDuplicates or pre-aggregate to one row per key first" in msg
+    assert e.value.__cause__ is None and e.value.__suppress_context__
+    # nothing committed, nothing staged
+    assert _conv_state(spark, conv_sink) == before
+    assert not [f for f in os.listdir(conv_sink)
+                if f.startswith(".dml-") or f.startswith("stream-dml-")]
+
+
+def test_small_upsert_is_one_part_file(spark, conv_sink, caplog):
+    """AQE sizes the encode exchange: a small upsert spanning several
+    buckets runs as one task and commits one part file."""
+    df = spark.createDataFrame(
+        [Row(conv_id=f"c{i:03d}", turn_idx=t, text="edit")
+         for i in range(40) for t in range(3)], CONV_SCHEMA).repartition(4)
+    with caplog.at_level("INFO", logger="oroch_spark"):
+        man = dml.upsert(spark, conv_sink, df)
+    assert len(man["files"]) == 1 and man["blocks"] > 1
+    assert (f"upsert committed batch {man['batch_id']}: "
+            f"blocks={man['blocks']} files=1 wall_s=") in caplog.text
+    rows = (spark.read.format("oroch").option("latest_wins", "true")
+            .load(conv_sink).collect())
+    # 120 upserted keys + turn 3 of the six base conversations
+    assert len(rows) == 126
+    assert sum(r.text == "edit" for r in rows) == 120

@@ -346,3 +346,53 @@ def test_lookup_and_group_count_on_evolved_table(spark):
     # group_agg grouped by the added column (was already tolerant)
     ga = engine.group_agg(blocks, kinds_v2, ["b"], "a").collect()
     assert {r.b for r in ga} == {None, "x0", "x1", "x2"}
+
+
+def _encode_sorted(batches, unique_keys=True, block_rows=4):
+    """Run the encode kernel directly on pre-sorted Arrow batches."""
+    kinds = [("c", "str"), ("t", "f64")]
+    fn = engine.make_encode_fn(kinds, ["c", "t"], block_rows, frozenset(),
+                               unique_keys=unique_keys)
+    return [b for b in fn(iter(batches))]
+
+
+def _sorted_batch(buckets, cs, ts):
+    import pyarrow as pa
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cs, pa.string()), pa.array(ts, pa.float64()),
+         pa.array(buckets, pa.int32())], names=["c", "t", "_bucket"])
+
+
+@pytest.mark.parametrize("cs, ts, dup", [
+    # neighbours inside one block
+    (["a", "a", "b"], [1.0, 1.0, 2.0], ("a", 1.0)),
+    # last row of block 0 and first row of block 1 (block_rows=4)
+    (["a", "b", "c", "d", "d", "e"], [0.0] * 6, ("d", 0.0)),
+    # NULL equals NULL, as in groupBy
+    ([None, None, "a"], [None, None, 1.0], (None, None)),
+    (["a", "a"], [float("nan"), float("nan")], ("a", float("nan"))),
+])
+def test_encode_kernel_rejects_neighbouring_duplicate_keys(cs, ts, dup):
+    batch = _sorted_batch([0] * len(cs), cs, ts)
+    with pytest.raises(engine.DuplicateKeyError) as e:
+        _encode_sorted([batch])
+    assert str(e.value) == f"duplicate key {dup!r}"
+    # the driver reads the key back out of the Spark job failure text
+    assert engine.duplicate_key_in(RuntimeError(
+        "Job aborted.\nTraceback ...\noroch_spark.engine."
+        f"DuplicateKeyError: {e.value}\n\tat org.apache")) == repr(dup)
+    # without the flag the same rows encode
+    assert sum(b.num_rows for b in _encode_sorted([batch], False)) >= 1
+
+
+def test_encode_kernel_unique_keys_spans_batches_not_buckets():
+    # a duplicate split across two input batches is caught; equal keys
+    # in different buckets (a different hash domain) are not compared
+    dup = [_sorted_batch([0, 0], ["a", "b"], [1.0, 2.0]),
+           _sorted_batch([0, 1], ["b", "b"], [2.0, 2.0])]
+    with pytest.raises(engine.DuplicateKeyError, match="'b', 2.0"):
+        _encode_sorted(dup, block_rows=2)
+    ok = [_sorted_batch([0, 0, 1], ["a", "b", "b"], [1.0, 2.0, 2.0])]
+    out = _encode_sorted(ok, block_rows=2)
+    assert sum(b.num_rows for b in out) == 2   # one block per bucket
+    assert engine.duplicate_key_in(ValueError("other failure")) is None

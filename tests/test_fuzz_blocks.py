@@ -13,8 +13,8 @@ invariants the reference's randomized round-trip asserts
 (`/root/reference/tests/unit/integer_group.cc:8-22`), at selector scope.
 
 Default budget is a few hundred blocks (~2 s); OROCH_FUZZ_BLOCKS=40000
-reruns the deep sweep (the r5 session ran 40k int + 10k str blocks
-clean, ~8 min).
+reruns the deep sweep (the deep runs recorded in PARITY.md covered 100k
+int + 25k string blocks across two seeds clean).
 """
 import os
 

@@ -11,7 +11,8 @@ zero-grace vacuum, upserts resurrecting deleted keys — end-to-end
 through the real sink (`sources/dml.py`, `sources/datasource.py`).
 
 Default 6 steps (~1 min); OROCH_FUZZ_DML_STEPS / OROCH_FUZZ_DML_SEED
-crank it (the r5 session ran 30-step sequences at three seeds clean).
+crank it (the deep runs recorded in PARITY.md made 208 steps across
+nine seeds clean).
 """
 import os
 import random
