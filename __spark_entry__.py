@@ -996,8 +996,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     Library-level ops still outside the capped surface, evidenced by
     pytest + PARITY.md: dedup.connected_components / near_dup_dedup
     (exact union-find oracle in tests/test_cc_clusters.py), streaming
-    dedup, grep_where, BFD packing, stratified/epoch/mixing sampling,
-    media codecs (tests/test_mediacodec.py)."""
+    dedup, grep_where, BFD packing, stratified/epoch/mixing sampling."""
     return {
         # --- round-5 rotation: previously pytest-only operators ------
         "dml_upsert_delete_events": _q_dml_upsert_delete,

@@ -30,9 +30,10 @@ N_SRC_FILES = int(os.environ.get("OROCH_BENCH_SRC_FILES", "256"))
 # Encode mode for the headline metric:
 #   maponly  (default) shuffle-free encode of the conv-clustered source
 #            (engine.encode_parquet_maponly) — the plan that scales
-#   staged   two-phase: JVM shuffle -> staged parquet -> python workers
-#   shuffle  single-plan salted repartition + mapInArrow
+#   shuffle  salted repartition + mapInArrow (engine.encode_df), the
+#            plan for unclustered input
 MODE = os.environ.get("OROCH_BENCH_MODE", "maponly")
+MODES = ("maponly", "shuffle")
 
 
 def build_spark(cores: int):
@@ -57,6 +58,9 @@ def main() -> None:
     ap.add_argument("--reps", type=int,
                     default=int(os.environ.get("OROCH_BENCH_REPS", "3")))
     args = ap.parse_args()
+    if MODE not in MODES:
+        raise ValueError(f"OROCH_BENCH_MODE={MODE!r}: expected "
+                         + "|".join(MODES))
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
@@ -71,6 +75,8 @@ def main() -> None:
     queries: dict[str, float] = {}
     queries_min: dict[str, float] = {}
     unreliable: list[str] = []
+    # non-headline failures, {name: repr(exc)}: reported, never dropped
+    errors: dict[str, str] = {}
     extra: dict = {}
 
     def timed(name, fn, required=True, reps=None):
@@ -96,10 +102,10 @@ def main() -> None:
                 t0 = time.time()
                 out = fn()
                 times.append(time.time() - t0)
-        except Exception:
+        except Exception as exc:
             if required:
                 raise
-            queries[name] = None  # non-headline op failed; keep the line
+            errors[name] = repr(exc)  # non-headline: report, keep the line
             return None
         ts = sorted(times)
         queries[name] = round(ts[len(ts) // 2], 3)
@@ -130,11 +136,6 @@ def main() -> None:
             blocks = engine.encode_parquet_maponly(
                 spark, src_dir, ["conv_id", "turn_idx"],
                 text_cols=["text"])
-        elif MODE == "staged":
-            blocks = engine.encode_df_staged(
-                src, ["conv_id", "turn_idx"],
-                staging_dir=tempfile.mkdtemp(prefix="oroch_stage_"),
-                n_buckets=N_BUCKETS, text_cols=["text"])
         else:
             blocks = engine.encode_df(src, ["conv_id", "turn_idx"],
                                       n_buckets=N_BUCKETS,
@@ -269,8 +270,8 @@ def main() -> None:
               lambda: engine.approx_distinct(sk_blocks,
                                              "user_id").collect(),
               required=False)
-    except Exception:
-        pass
+    except Exception as exc:
+        errors["approx_ndv_setup"] = repr(exc)
 
     # --- declarative DataSource surface (round 4) ------------------------
     # format("oroch") pushdown read + latest-wins merge-on-read over an
@@ -321,8 +322,8 @@ def main() -> None:
               lambda: spark.read.format("oroch")
               .option("latest_wins", "true").load(lw_sink).count(),
               required=False)
-    except Exception:
-        pass  # declarative-surface timings are optional extras
+    except Exception as exc:  # declarative-surface timings are extras
+        errors["datasource_setup"] = repr(exc)
 
     # --- single-thread kernel throughput (noise-robust comparable) ------
     # The 32-thread wall clock on this overcommitted host (32 vCPU ~
@@ -375,6 +376,7 @@ def main() -> None:
         "reps": max(1, args.reps),
         "queries_min": queries_min,
         "unreliable": unreliable,
+        "errors": errors,
         "encode_mode": MODE,
         **extra,
     }

@@ -8,7 +8,7 @@ on multi-executor clusters):
         --src  /path/to/transcripts_parquet \
         --out  /path/to/encoded \
         --keys conv_id,turn_idx --text-cols text \
-        --mode maponly                      # or staged / shuffle
+        --mode maponly                      # or shuffle
     spark-submit --py-files dist/oroch_spark.zip cli.py verify \
         --src /path/to/transcripts_parquet --out /path/to/encoded
     spark-submit --py-files dist/oroch_spark.zip cli.py metrics \
@@ -20,7 +20,7 @@ on multi-executor clusters):
         --agg-col user_id
 
 ``encode`` is checkpointed: rerunning after an interruption resumes
-from the per-bucket manifest (shuffle/staged modes via
+from the per-bucket manifest (shuffle mode via
 ``checkpoint.encode_job``; maponly re-encodes only files without a
 manifest row). ``metrics`` prints the per-partition throughput rollup
 (rows, bytes in/out, codec histogram, encode wall, rows/sec) the north
@@ -114,28 +114,12 @@ def cmd_encode(args) -> None:
                 blocks.unpersist()
     else:
         df = spark.read.parquet(args.src)
-        if args.mode == "staged":
-            blocks = engine.encode_df_staged(
-                df, keys, staging_dir=os.path.join(args.out, "_staging"),
-                n_buckets=args.buckets, block_rows=args.block_rows,
-                text_cols=text_cols, bloom_cols=bloom_cols,
-                sketch_cols=sketch_cols)
-            blocks.persist()
-            try:
-                (blocks.write.partitionBy("bucket").mode("overwrite")
-                       .parquet(os.path.join(args.out, "blocks")))
-                engine.manifest_rows(blocks, snapshot_id, "cli") \
-                      .write.mode("append") \
-                      .parquet(os.path.join(args.out, "manifest"))
-            finally:
-                blocks.unpersist()
-        else:
-            checkpoint.encode_job(
-                spark, df, args.out, keys, snapshot_id,
-                n_buckets=args.buckets, block_rows=args.block_rows,
-                text_cols=text_cols, bloom_cols=bloom_cols,
-                sketch_cols=sketch_cols,
-                buckets_per_stage=args.buckets_per_stage)
+        checkpoint.encode_job(
+            spark, df, args.out, keys, snapshot_id,
+            n_buckets=args.buckets, block_rows=args.block_rows,
+            text_cols=text_cols, bloom_cols=bloom_cols,
+            sketch_cols=sketch_cols,
+            buckets_per_stage=args.buckets_per_stage)
     summary = (spark.read.parquet(os.path.join(args.out, "blocks"))
                .agg(F.sum("n").alias("rows"),
                     F.sum("bytes_in").alias("bytes_in"),
@@ -440,7 +424,7 @@ def main() -> None:
     e.add_argument("--keys", default="conv_id,turn_idx")
     e.add_argument("--text-cols", default="text")
     e.add_argument("--mode", default="maponly",
-                   choices=["maponly", "staged", "shuffle"])
+                   choices=["maponly", "shuffle"])
     e.add_argument("--buckets", type=int, default=128)
     e.add_argument("--block-rows", type=int, default=65536)
     e.add_argument("--buckets-per-stage", type=int, default=None)

@@ -200,7 +200,7 @@ Per-query wall seconds at each level:
 """
     for q in res[lo]["queries"]:
         md += (f"| {q} | {res[lo]['queries'][q]} "
-               f"| {res[hi]['queries'][q]} |\n")
+               f"| {res[hi]['queries'].get(q)} |\n")
     md += f"""
 Raw JSON:
 

@@ -1589,26 +1589,23 @@ def encode_df_zorder(df: DataFrame, zcols: list[str],
 
 def make_file_encode_fn(kinds: list[tuple[str, str]], key_cols: list[str],
                         block_rows: int, text_cols: frozenset[str],
+                        file_map: list[tuple[str, int]],
                         arrow_batch_rows: int = 16384,
                         bloom_cols: frozenset = frozenset(),
-                        sketch_cols: frozenset = frozenset(),
-                        file_map: Optional[list[tuple[str, int]]] = None):
-    """Encode kernel that PULLS its input: each task row names a staged
-    parquet file (one bucket) which the worker reads directly via
-    pyarrow's C++ reader. The bulk bytes never cross the JVM<->Python
-    pipe — only (path, bucket) goes in and compressed blocks come out.
-    (On this sandbox the pipe layer collapses under concurrency; on a
-    real cluster this is still the cheaper path: arrow IPC
-    serialization is skipped and the columnar decode happens where the
-    data is consumed.)
+                        sketch_cols: frozenset = frozenset()):
+    """Encode kernel that PULLS its input: each task row is an ``id``
+    ordinal into ``file_map``, a list of (parquet path, bucket) pairs;
+    the worker reads each named file directly via pyarrow's C++ reader
+    and tags its rows with that bucket. The bulk bytes never cross the
+    JVM<->Python pipe — only ordinals go in and compressed blocks come
+    out.
 
-    With ``file_map`` the input batches carry only ``id`` ordinals (a
-    bare ``spark.range`` plan) and the (path, bucket) list rides the
-    pickled UDF closure — serialized once per stage into the broadcast
-    task binary, NOT once per task. This keeps the driver plan free of
-    O(#files) literal arrays, whose analyze/codegen time is a pure
-    Amdahl serial term that caps scaling efficiency (measured ~0.3 s
-    plan + ~0.4 s per-job literal evaluation for 256 files)."""
+    The input plan is a bare ``spark.range`` and ``file_map`` rides
+    the pickled UDF closure — serialized once per stage into the
+    broadcast task binary, NOT once per task. This keeps the driver
+    plan free of O(#files) literal arrays, whose analyze/codegen time
+    is a pure Amdahl serial term that caps scaling efficiency (measured
+    ~0.3 s plan + ~0.4 s per-job literal evaluation for 256 files)."""
     inner = make_encode_fn(kinds, key_cols, block_rows, text_cols,
                            bloom_cols, frozenset(), sketch_cols)
 
@@ -1618,13 +1615,8 @@ def make_file_encode_fn(kinds: list[tuple[str, str]], key_cols: list[str],
 
         def row_batches():
             for task in batches:
-                if file_map is not None:
-                    pairs = [file_map[i]
-                             for i in task.column("id").to_pylist()]
-                else:
-                    pairs = list(zip(task.column("path").to_pylist(),
-                                     task.column("bucket").to_pylist()))
-                for path, bucket in pairs:
+                for i in task.column("id").to_pylist():
+                    path, bucket = file_map[i]
                     pf = pq.ParquetFile(path)
                     for rb in pf.iter_batches(batch_size=arrow_batch_rows):
                         bcol = pa.array(
@@ -1696,9 +1688,9 @@ def encode_parquet_maponly(spark, source: str, key_cols: list[str],
 
     An Iceberg transcript table is normally written clustered by
     conv_id (ingest appends whole conversations; compaction sorts by
-    the natural key), so the expensive salted shuffle in
-    ``encode_df``/``encode_df_staged`` buys nothing: every file already
-    holds contiguous runs of conversations in turn order. This path
+    the natural key), so the expensive salted shuffle in ``encode_df``
+    buys nothing: every file already holds contiguous runs of
+    conversations in turn order. This path
     maps each source parquet file straight to encoded blocks — one
     narrow stage, no wide exchange anywhere, which is the plan that
     survives a 100 TB scale-up (encode cost grows linearly with data;
@@ -1708,8 +1700,9 @@ def encode_parquet_maponly(spark, source: str, key_cols: list[str],
     self-contained and the round-trip invariant is equality under
     stable (conv_id, turn_idx) ordering, which a decode + sort always
     restores. Un-clustered input merely compresses worse; for that
-    case use ``encode_df_staged`` (explicit salted repartition,
-    SURVEY.md §7 step 5).
+    case use ``encode_df`` (or ``checkpoint.encode_job`` for a
+    resumable job), whose salted repartition regroups each
+    conversation first (SURVEY.md §7 step 5).
 
     Skew: a single huge conversation or file does not pin one task
     beyond its own bytes — the kernel cuts ``block_rows`` blocks while
@@ -1758,66 +1751,9 @@ def encode_parquet_maponly(spark, source: str, key_cols: list[str],
     # (~60 B/file: 10^5 files ~ 6 MB — fine at cluster scale).
     fdf = spark.range(0, len(rows), 1, numPartitions=tasks)
     fn = make_file_encode_fn(kinds, key_cols, block_rows,
-                             frozenset(text_cols or []),
+                             frozenset(text_cols or []), rows,
                              bloom_cols=frozenset(bloom_cols or []),
-                             sketch_cols=frozenset(sketch_cols or []),
-                             file_map=rows)
-    return fdf.mapInArrow(fn, schema=BLOCK_SCHEMA)
-
-
-def encode_df_staged(df: DataFrame, key_cols: list[str], staging_dir: str,
-                     n_buckets: int = 32, block_rows: int = 65536,
-                     chunk_rows: int = 8192,
-                     text_cols: Optional[list[str]] = None,
-                     bucket_filter: Optional[list[int]] = None,
-                     bloom_cols: Optional[list[str]] = None,
-                     sketch_cols: Optional[list[str]] = None) -> DataFrame:
-    """Two-phase encode: (1) JVM-only shuffle+sort materialized to a
-    staging parquet directory laid out ``_bucket=<k>/`` (exactly one
-    sorted file per bucket — no hash-collision skew); (2) python
-    workers read staged files directly (no bulk pipe transfer) and emit
-    compressed blocks.
-
-    Phase boundaries also make the shuffle restartable for free: the
-    staging directory is a reusable artifact of the expensive wide op.
-    """
-    import glob
-    import re
-
-    spark = df.sparkSession
-    kinds = column_kinds(df.schema)
-    conv_col = key_cols[0]
-    order_col = key_cols[1] if len(key_cols) > 1 else None
-    text_cols_f = frozenset(text_cols or [])
-    # micros on disk so pyarrow reads timestamp[us] (INT96/nanos would
-    # silently change the int64 scale the ts codec round-trips through)
-    spark.conf.set("spark.sql.parquet.outputTimestampType",
-                   "TIMESTAMP_MICROS")
-    staged = with_bucket(df, conv_col, order_col, n_buckets, chunk_rows)
-    if bucket_filter is not None:
-        staged = staged.filter(
-            F.col("_bucket").isin([int(b) for b in bucket_filter]))
-    # Sort MUST lead with _bucket: FileFormatWriter requires output
-    # ordered by the partition columns and would otherwise insert its
-    # own (non-stable) sort on _bucket, scrambling the key order inside
-    # each bucket file.
-    (staged.repartition(n_buckets, F.col("_bucket"))
-           .sortWithinPartitions("_bucket", *key_cols)
-           .write.mode("overwrite").partitionBy("_bucket")
-           .parquet(staging_dir))
-    files = sorted(glob.glob(
-        os.path.join(staging_dir, "_bucket=*", "part-*.parquet")))
-    rows = [(f, int(re.search(r"_bucket=(\d+)", f).group(1)))
-            for f in files]
-    # spark.range + the file list in the UDF closure — the same
-    # pattern as encode_parquet_maponly: no pickled-RDD scan (its
-    # second Python worker measured ~2x per-task overhead) and no
-    # O(#files) literal array in the driver plan
-    fdf = spark.range(0, len(rows), 1, numPartitions=max(len(rows), 1))
-    fn = make_file_encode_fn(kinds, key_cols, block_rows, text_cols_f,
-                             bloom_cols=frozenset(bloom_cols or []),
-                             sketch_cols=frozenset(sketch_cols or []),
-                             file_map=rows)
+                             sketch_cols=frozenset(sketch_cols or []))
     return fdf.mapInArrow(fn, schema=BLOCK_SCHEMA)
 
 

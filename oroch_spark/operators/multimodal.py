@@ -1,22 +1,16 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
-Two tiers of decode:
+The feature kernel is a deterministic stand-in decode: the first 64
+payload bytes of each row become an 8x8 pseudo-pixel tile, and
+``extract_features`` reduces each tile to 8 per-column means. That
+keeps the Spark-side plumbing real and tested — schema, Arrow batch
+shapes, zero-copy binary buffers, vectorized batch math, partition
+sizing — and gives a SQL oracle something it can recompute from the
+same bytes.
 
-- **Real (round 4)**: PNG and baseline/progressive JPEG images,
-  WAV/PCM audio, Y4M and Motion-JPEG AVI/MP4 video decode fully via
-  the from-scratch codecs in ``operators/mediacodec.py`` —
-  ``image_features`` /
-  ``audio_features`` / ``video_frame_features`` below compute genuine
-  per-channel pixel stats and signal stats from decoded payloads, and
-  ``media_metadata`` probes every container (incl. MP4 box-tree
-  metadata) at header speed.
-- **Stub**: formats that need native libs absent from this container
-  (H.264/HEVC bitstreams) keep the deterministic stand-in (first 64
-  payload bytes as an 8x8 pseudo-pixel tile) so the Spark-side
-  plumbing — schema, Arrow batch shapes, zero-copy binary buffers,
-  vectorized batch math, partition sizing — stays real and tested.
-  Swapping in the native decoder means replacing ``_tile_matrix``'s
-  byte-gather with the library call; the batch shape stays.
+The one swap point is ``_tile_matrix``'s byte gather: a native image
+decoder plugs in there, returning an (n, 64) tile per batch, and the
+batch shape and everything downstream stay as they are.
 """
 from __future__ import annotations
 
@@ -153,444 +147,4 @@ def synthetic_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
         rows.append((i, "image", "image/fake",
                      bytes(rng.integers(0, 256, size, dtype=np.uint8)),
                      64, 64, 0))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Real decoders (round 4): PNG + baseline/progressive JPEG images,
-# WAV audio, Y4M + Motion-JPEG AVI/MP4 video (full ISO-BMFF
-# sample-table demux) via the from-scratch codecs in
-# operators/mediacodec.py, plus the metadata-speed media_probe. Only
-# H.264/HEVC bitstream decode still needs native libs and keeps the
-# swap-point story above.
-# ---------------------------------------------------------------------------
-
-IMAGE_FEATURE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("channels", T.IntegerType()),
-    T.StructField("mean", T.ArrayType(T.FloatType())),   # per channel
-    T.StructField("std", T.ArrayType(T.FloatType())),
-    T.StructField("n_bytes", T.IntegerType()),
-])
-
-AUDIO_FEATURE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("sample_rate", T.IntegerType()),
-    T.StructField("channels", T.IntegerType()),
-    T.StructField("duration_ms", T.IntegerType()),
-    T.StructField("rms", T.DoubleType()),
-    T.StructField("zero_cross_rate", T.DoubleType()),
-    T.StructField("n_bytes", T.IntegerType()),
-])
-
-
-def image_features(df: DataFrame) -> DataFrame:
-    """REAL image feature extraction for PNG and baseline JPEG
-    payloads: dimensions and per-channel mean/std from fully decoded
-    pixels (`mediacodec.image_decode` — format-sniffing dispatch to
-    the from-scratch PNG (zlib + numpy unfiltering) and JPEG (huffman
-    + IDCT) decoders; no PIL/libjpeg). The payload decode is
-    inherently per-row work; Arrow still batches the I/O, and each
-    decoded image reduces vectorized. Undecodable payloads yield NULL
-    features (schema-stable: mixed media tables filter on mime or on
-    the NULLs)."""
-    from . import mediacodec as mc
-
-    def run(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        out = pa.schema([
-            ("media_id", pa.int64()), ("width", pa.int32()),
-            ("height", pa.int32()), ("channels", pa.int32()),
-            ("mean", pa.list_(pa.float32())),
-            ("std", pa.list_(pa.float32())),
-            ("n_bytes", pa.int32()),
-        ])
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            pays = batch.column("payload").to_pylist()
-            rows = {k: [] for k in ("w", "h", "c", "m", "s", "nb")}
-            for p in pays:
-                rows["nb"].append(len(p) if p is not None else 0)
-                try:
-                    img = mc.image_decode(p)
-                except Exception:
-                    for k in ("w", "h", "c", "m", "s"):
-                        rows[k].append(None)
-                    continue
-                if img.ndim == 2:
-                    img = img[:, :, None]
-                h, w, c = img.shape
-                f = img.reshape(-1, c).astype(np.float64)
-                rows["w"].append(w)
-                rows["h"].append(h)
-                rows["c"].append(c)
-                rows["m"].append([float(x) for x in f.mean(axis=0)])
-                rows["s"].append([float(x) for x in f.std(axis=0)])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()),
-                 pa.array(rows["w"], type=pa.int32()),
-                 pa.array(rows["h"], type=pa.int32()),
-                 pa.array(rows["c"], type=pa.int32()),
-                 pa.array(rows["m"], type=pa.list_(pa.float32())),
-                 pa.array(rows["s"], type=pa.list_(pa.float32())),
-                 pa.array(rows["nb"], type=pa.int32())], schema=out)
-
-    return df.select("media_id", "payload").mapInArrow(
-        run, schema=IMAGE_FEATURE_SCHEMA)
-
-
-def audio_features(df: DataFrame) -> DataFrame:
-    """REAL audio feature extraction for WAV/PCM payloads
-    (`mediacodec.wav_decode`): sample rate, duration, RMS level and
-    zero-crossing rate over the decoded samples. Non-WAV payloads
-    yield NULL features."""
-    from . import mediacodec as mc
-
-    def run(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        out = pa.schema([
-            ("media_id", pa.int64()), ("sample_rate", pa.int32()),
-            ("channels", pa.int32()), ("duration_ms", pa.int32()),
-            ("rms", pa.float64()), ("zero_cross_rate", pa.float64()),
-            ("n_bytes", pa.int32()),
-        ])
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            pays = batch.column("payload").to_pylist()
-            rows = {k: [] for k in ("r", "c", "d", "rm", "z", "nb")}
-            for p in pays:
-                rows["nb"].append(len(p) if p is not None else 0)
-                try:
-                    samples, rate = mc.wav_decode(p)
-                except Exception:
-                    for k in ("r", "c", "d", "rm", "z"):
-                        rows[k].append(None)
-                    continue
-                n, ch = samples.shape
-                s64 = samples.astype(np.float64)
-                ch0 = s64[:, 0]   # a mixdown of out-of-phase channels
-                rows["r"].append(rate)  # would be silence; rms spans
-                rows["c"].append(ch)    # all channels, zcr channel 0
-                rows["d"].append(int(round(n * 1000 / rate)))
-                rows["rm"].append(float(np.sqrt((s64 ** 2).mean()))
-                                  if n else 0.0)
-                rows["z"].append(float(np.mean(
-                    np.signbit(ch0[1:]) != np.signbit(ch0[:-1])))
-                    if n > 1 else 0.0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()),
-                 pa.array(rows["r"], type=pa.int32()),
-                 pa.array(rows["c"], type=pa.int32()),
-                 pa.array(rows["d"], type=pa.int32()),
-                 pa.array(rows["rm"], type=pa.float64()),
-                 pa.array(rows["z"], type=pa.float64()),
-                 pa.array(rows["nb"], type=pa.int32())], schema=out)
-
-    return df.select("media_id", "payload").mapInArrow(
-        run, schema=AUDIO_FEATURE_SCHEMA)
-
-
-def synthetic_png_media(spark, n: int = 24, seed: int = 7) -> DataFrame:
-    """Deterministic REAL PNG media table (encoded with the
-    from-scratch writer): mixed greyscale/RGB/RGBA sizes."""
-    from . import mediacodec as mc
-
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        h, w = int(rng.integers(4, 24)), int(rng.integers(4, 24))
-        c = int(rng.choice([1, 3, 4]))
-        img = rng.integers(0, 256, (h, w) if c == 1 else (h, w, c),
-                           dtype=np.uint8)
-        rows.append((i, "image", "image/png", mc.png_encode(img),
-                     w, h, 0))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-def synthetic_jpeg_media(spark, n: int = 16, seed: int = 11) -> DataFrame:
-    """Deterministic REAL JPEG media table (encoded with the
-    from-scratch baseline writer): mixed grayscale/RGB, mixed
-    subsampling and qualities, some with restart intervals."""
-    from . import mediacodec as mc
-
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        h, w = int(rng.integers(8, 40)), int(rng.integers(8, 40))
-        gray = bool(rng.integers(0, 2))
-        # smooth-ish content (JPEG's home turf): low-freq gradient
-        yy = np.linspace(0, float(rng.integers(64, 255)), h)
-        xx = np.linspace(0, float(rng.integers(64, 255)), w)
-        base = np.add.outer(yy, xx) / 2
-        if gray:
-            img = np.clip(base, 0, 255).astype(np.uint8)
-        else:
-            img = np.clip(np.stack(
-                [base, base[::-1], 255 - base], axis=2), 0,
-                255).astype(np.uint8)
-        sub = str(rng.choice(["444", "422", "420"]))
-        q = int(rng.choice([75, 90, 95]))
-        rst = int(rng.choice([0, 0, 2, 5]))
-        rows.append((i, "image", "image/jpeg",
-                     mc.jpeg_encode(img, quality=q, subsample=sub,
-                                    restart=rst), w, h, 0))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-def synthetic_wav_media(spark, n: int = 12, seed: int = 7) -> DataFrame:
-    """Deterministic REAL WAV media table (PCM 16-bit sines)."""
-    from . import mediacodec as mc
-
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        rate = int(rng.choice([8000, 16000]))
-        dur = float(rng.uniform(0.05, 0.3))
-        t = np.arange(int(rate * dur)) / rate
-        freq = float(rng.uniform(100, 2000))
-        amp = float(rng.uniform(1000, 20000))
-        sig = (amp * np.sin(2 * np.pi * freq * t)).astype(np.int16)
-        ch = int(rng.choice([1, 2]))
-        smp = sig if ch == 1 else np.stack([sig, -sig], axis=1)
-        rows.append((i, "audio", "audio/wav", mc.wav_encode(smp, rate),
-                     0, 0, int(round(dur * 1000))))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-VIDEO_FEATURE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("n_frames_sampled", T.IntegerType()),
-    T.StructField("fps", T.DoubleType()),
-    T.StructField("frame_means", T.ArrayType(T.FloatType())),
-    T.StructField("motion", T.DoubleType()),   # mean |frame diff|
-    T.StructField("n_bytes", T.IntegerType()),
-])
-
-
-def video_frame_features(df: DataFrame, every: int = 5,
-                         max_frames: int = 16) -> DataFrame:
-    """REAL video frame sampling for Y4M and Motion-JPEG AVI/MP4
-    payloads (`mediacodec.video_decode`): every k-th luma frame is
-    decoded (the skipped frames' bytes are never touched — Y4M seeks
-    over planes, AVI skips whole RIFF chunks, MP4 reads only the
-    sampled entries' chunk offsets), yielding per-frame mean luma and
-    a motion score (mean absolute difference between consecutive
-    sampled frames). Undecodable payloads yield NULLs."""
-    from . import mediacodec as mc
-
-    def run(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        out = pa.schema([
-            ("media_id", pa.int64()), ("width", pa.int32()),
-            ("height", pa.int32()), ("n_frames_sampled", pa.int32()),
-            ("fps", pa.float64()),
-            ("frame_means", pa.list_(pa.float32())),
-            ("motion", pa.float64()), ("n_bytes", pa.int32()),
-        ])
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            pays = batch.column("payload").to_pylist()
-            rows = {k: [] for k in ("w", "h", "nf", "fps", "fm", "mo",
-                                    "nb")}
-            for p in pays:
-                rows["nb"].append(len(p) if p is not None else 0)
-                try:
-                    frames, (fn, fd) = mc.video_decode(
-                        p, every=every, max_frames=max_frames)
-                except Exception:
-                    for k in ("w", "h", "nf", "fps", "fm", "mo"):
-                        rows[k].append(None)
-                    continue
-                n, h, w = frames.shape
-                f64 = frames.astype(np.float64)
-                rows["w"].append(w)
-                rows["h"].append(h)
-                rows["nf"].append(n)
-                rows["fps"].append(fn / fd)
-                rows["fm"].append([float(x)
-                                   for x in f64.mean(axis=(1, 2))])
-                rows["mo"].append(float(np.abs(
-                    np.diff(f64, axis=0)).mean()) if n > 1 else 0.0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()),
-                 pa.array(rows["w"], type=pa.int32()),
-                 pa.array(rows["h"], type=pa.int32()),
-                 pa.array(rows["nf"], type=pa.int32()),
-                 pa.array(rows["fps"], type=pa.float64()),
-                 pa.array(rows["fm"], type=pa.list_(pa.float32())),
-                 pa.array(rows["mo"], type=pa.float64()),
-                 pa.array(rows["nb"], type=pa.int32())], schema=out)
-
-    return df.select("media_id", "payload").mapInArrow(
-        run, schema=VIDEO_FEATURE_SCHEMA)
-
-
-def resize_images(df: DataFrame, out_h: int, out_w: int,
-                  method: str = "nearest") -> DataFrame:
-    """REAL image resize for PNG and baseline JPEG payloads: decode,
-    resize (pure-numpy nearest-neighbor, or exact area mean-pool when
-    the scale is an integer downscale and ``method='area'``),
-    re-encode in the source format — the training-data normalization
-    transform. Output schema = input schema with payload/width/height
-    replaced; undecodable rows pass through untouched (payload
-    unchanged, dims NULL)."""
-    from . import mediacodec as mc
-
-    def run(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        out = pa.schema([
-            ("media_id", pa.int64()), ("payload", pa.binary()),
-            ("width", pa.int32()), ("height", pa.int32()),
-        ])
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            pays = batch.column("payload").to_pylist()
-            o_pay, o_w, o_h = [], [], []
-            for p in pays:
-                try:
-                    img = mc.image_decode(p)
-                except Exception:
-                    o_pay.append(p)
-                    o_w.append(None)
-                    o_h.append(None)
-                    continue
-                if method == "area" and img.shape[0] % out_h == 0 \
-                        and img.shape[0] // out_h \
-                        == img.shape[1] // out_w \
-                        and img.shape[1] % out_w == 0:
-                    r = mc.downscale_area(img, img.shape[0] // out_h)
-                else:
-                    r = mc.resize_nearest(img, out_h, out_w)
-                if p[:2] == b"\xff\xd8":     # keep the source format
-                    o_pay.append(mc.jpeg_encode(r, quality=90,
-                                                subsample="444"))
-                else:
-                    o_pay.append(mc.png_encode(r))
-                o_w.append(out_w)
-                o_h.append(out_h)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()),
-                 pa.array(o_pay, type=pa.binary()),
-                 pa.array(o_w, type=pa.int32()),
-                 pa.array(o_h, type=pa.int32())], schema=out)
-
-    return df.select("media_id", "payload").mapInArrow(
-        run, schema=T.StructType([
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]))
-
-
-def synthetic_y4m_media(spark, n: int = 6, seed: int = 9) -> DataFrame:
-    """Deterministic REAL Y4M media table: moving-gradient clips."""
-    from . import mediacodec as mc
-
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        h, w = int(rng.choice([8, 12])), int(rng.choice([8, 16]))
-        nf = int(rng.integers(10, 40))
-        base = rng.integers(0, 200, (h, w), dtype=np.uint8)
-        frames = np.stack([(base + 3 * t) % 256 for t in range(nf)]) \
-            .astype(np.uint8)
-        rows.append((i, "video", "video/x-y4m",
-                     mc.y4m_encode(frames, rate=(30, 1)),
-                     w, h, int(nf * 1000 / 30)))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-PROBE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("container", T.StringType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("duration_ms", T.IntegerType()),
-    T.StructField("codec", T.StringType()),
-    T.StructField("n_frames", T.IntegerType()),
-    T.StructField("n_bytes", T.IntegerType()),
-])
-
-
-def media_metadata(df: DataFrame) -> DataFrame:
-    """Metadata-speed probe over a mixed media table
-    (`mediacodec.media_probe`): container, kind, dimensions, duration,
-    codec and frame count from the HEADERS alone — no pixel/sample
-    decode, so this scans payload prefixes at IO speed. Covers
-    PNG/JPEG/WAV/Y4M/AVI and MP4 (ISO BMFF box walk — real metadata
-    even though H.264 frame decode needs native libs). Unrecognized
-    payloads yield NULL columns. The triage step a training pipeline
-    runs FIRST: filter/group by format and size before paying for any
-    real decode."""
-    from . import mediacodec as mc
-
-    def run(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        out = pa.schema([
-            ("media_id", pa.int64()), ("container", pa.string()),
-            ("kind", pa.string()), ("width", pa.int32()),
-            ("height", pa.int32()), ("duration_ms", pa.int32()),
-            ("codec", pa.string()), ("n_frames", pa.int32()),
-            ("n_bytes", pa.int32()),
-        ])
-        keys = ("container", "kind", "width", "height", "duration_ms",
-                "codec", "n_frames")
-        for batch in batches:
-            ids = batch.column("media_id").to_pylist()
-            pays = batch.column("payload").to_pylist()
-            cols = {k: [] for k in keys}
-            nbs = []
-            for p in pays:
-                nbs.append(len(p) if p is not None else 0)
-                try:
-                    d = mc.media_probe(p)
-                except Exception:
-                    d = {}
-                for k in keys:
-                    cols[k].append(d.get(k))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()),
-                 pa.array(cols["container"], type=pa.string()),
-                 pa.array(cols["kind"], type=pa.string()),
-                 pa.array(cols["width"], type=pa.int32()),
-                 pa.array(cols["height"], type=pa.int32()),
-                 pa.array(cols["duration_ms"], type=pa.int32()),
-                 pa.array(cols["codec"], type=pa.string()),
-                 pa.array(cols["n_frames"], type=pa.int32()),
-                 pa.array(nbs, type=pa.int32())], schema=out)
-
-    return df.select("media_id", "payload").mapInArrow(
-        run, schema=PROBE_SCHEMA)
-
-
-def synthetic_avi_media(spark, n: int = 6, seed: int = 13) -> DataFrame:
-    """Deterministic REAL Motion-JPEG AVI media table."""
-    from . import mediacodec as mc
-
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        h, w = int(rng.choice([16, 24])), int(rng.choice([16, 32]))
-        nf = int(rng.integers(6, 20))
-        yy = np.linspace(0, float(rng.integers(100, 255)), h)
-        xx = np.linspace(0, float(rng.integers(100, 255)), w)
-        base = np.add.outer(yy, xx) / 2
-        frames = np.stack([
-            np.clip(np.stack([base + 7 * t, base[::-1], 255 - base],
-                             axis=2), 0, 255).astype(np.uint8)
-            for t in range(nf)])
-        rows.append((i, "video", "video/x-msvideo",
-                     mc.avi_mjpeg_encode(frames, rate=(30, 1)),
-                     w, h, int(nf * 1000 / 30)))
     return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)

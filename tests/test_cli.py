@@ -31,7 +31,17 @@ def test_zip_contains_package(tmp_path):
     names = zipfile.ZipFile(out).namelist()
     assert "oroch_spark/engine.py" in names
     assert "oroch_spark/kernels/integers.py" in names
+    assert "oroch_spark/operators/mediacodec.py" not in names
     assert not any("__pycache__" in n for n in names)
+
+
+def test_encode_mode_choices(monkeypatch, capsys):
+    monkeypatch.setattr("sys.argv", ["cli.py", "encode", "--out", "o",
+                                     "--src", "s", "--mode", "staged"])
+    with pytest.raises(SystemExit) as exc:
+        cli.main()
+    assert exc.value.code == 2
+    assert "invalid choice: 'staged'" in capsys.readouterr().err
 
 
 def test_encode_verify_metrics_roundtrip(spark, src_dir, tmp_path, capsys):
@@ -150,17 +160,7 @@ def test_cli_bloom_encode_and_scan(spark, src_dir, tmp_path, capsys):
     assert summary["matches"] \
         == src.filter(F.col("turn_idx").between(3, 5)).count() > 0
 
-    # staged + checkpointed modes accept the flag too (plumbing check)
-    out2 = str(tmp_path / "encb2")
-    cli.cmd_encode(_ns(spark, src=src_dir, out=out2,
-                       keys="conv_id,turn_idx",
-                       text_cols="text", mode="staged", buckets=4,
-                       block_rows=512, buckets_per_stage=None,
-                       snapshot_id=None, bloom_cols="tool"))
-    capsys.readouterr()
-    b2 = spark.read.parquet(os.path.join(out2, "blocks"))
-    assert b2.filter(engine._col_stats("tool")["bm"].isNotNull()) \
-        .count() == b2.count()
+    # the checkpointed shuffle mode accepts the flag too (plumbing check)
     out3 = str(tmp_path / "encb3")
     cli.cmd_encode(_ns(spark, src=src_dir, out=out3,
                        keys="conv_id,turn_idx",

@@ -50,20 +50,6 @@ class TestRoundtrip:
         assert engine.checksum_df(src) == engine.checksum_df(dec)
         assert src.count() == dec.count()
 
-    def test_staged_roundtrip_bit_identical(self, spark, tiny, tmp_path):
-        # two-phase encode: JVM shuffle -> bucket-partitioned staging
-        # parquet -> python workers read files directly
-        blocks = engine.encode_df_staged(
-            tiny, ["conv_id", "turn_idx"],
-            staging_dir=str(tmp_path / "stage"),
-            n_buckets=6, block_rows=512, text_cols=["text"])
-        dec = engine.decode_df(blocks, engine.column_kinds(tiny.schema))
-        assert engine.checksum_df(dec) == engine.checksum_df(tiny)
-        # exactly one staged file per non-empty bucket
-        import glob
-        files = glob.glob(str(tmp_path / "stage" / "_bucket=*" / "part-*"))
-        assert 0 < len(files) <= 6
-
     def test_maponly_ns_timestamp_parquet(self, spark, tmp_path):
         # INT96/ns-unit parquet surfaces as timestamp[ns] in the
         # file-pull path; the encoder must normalize to epoch-micros
@@ -206,20 +192,6 @@ class TestRoundtrip:
         # JVM-side task-list projection)
         assert "filescan" not in plan.lower()
         assert "batchscan" not in plan.lower()
-
-    def test_staged_matches_direct_blocks(self, spark, tiny, tmp_path):
-        direct = engine.encode_df(tiny, ["conv_id", "turn_idx"],
-                                  n_buckets=6, block_rows=512,
-                                  text_cols=["text"]).toPandas()
-        staged = engine.encode_df_staged(
-            tiny, ["conv_id", "turn_idx"],
-            staging_dir=str(tmp_path / "st2"),
-            n_buckets=6, block_rows=512, text_cols=["text"]).toPandas()
-        a = direct.sort_values(["bucket", "block_idx"]).reset_index(drop=True)
-        b = staged.sort_values(["bucket", "block_idx"]).reset_index(drop=True)
-        assert a.n.tolist() == b.n.tolist()
-        assert a.key_min.tolist() == b.key_min.tolist()
-        assert a.bytes_out.sum() == b.bytes_out.sum()
 
     def test_compression_beats_reference_budget(self, spark, tiny):
         blocks = engine.encode_df(tiny, ["conv_id", "turn_idx"],
@@ -396,3 +368,33 @@ def test_encode_kernel_unique_keys_spans_batches_not_buckets():
     out = _encode_sorted(ok, block_rows=2)
     assert sum(b.num_rows for b in out) == 2   # one block per bucket
     assert engine.duplicate_key_in(ValueError("other failure")) is None
+
+
+def test_file_encode_kernel_pulls_files_by_ordinal(tmp_path):
+    # Spark-free: the kernel maps each ``id`` ordinal to a (path,
+    # bucket) pair, reads the file itself and tags its blocks
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    tables, paths = [], []
+    for i, seed in enumerate((1, 2)):
+        t = pa.Table.from_pandas(transcripts.generate_pandas(4, seed=seed),
+                                 preserve_index=False)
+        paths.append(str(tmp_path / f"f{i}.parquet"))
+        pq.write_table(t, paths[-1])
+        tables.append(t)
+    kinds = engine.arrow_column_kinds(tables[0].schema)
+    fn = engine.make_file_encode_fn(
+        kinds, ["conv_id", "turn_idx"], 16, frozenset(["text"]),
+        file_map=[(paths[0], 5), (paths[1], 9)])
+    task = pa.RecordBatch.from_pydict({"id": pa.array([1, 0], pa.int64())})
+    blocks = pa.Table.from_batches(list(fn(iter([task]))))
+    buckets = blocks.column("bucket").to_pylist()
+    assert [b for i, b in enumerate(buckets)
+            if i == 0 or b != buckets[i - 1]] == [9, 5]
+    dec = engine.make_decode_fn(
+        kinds, tables[0].schema.serialize().to_pybytes())
+    for bucket, t in ((5, tables[0]), (9, tables[1])):
+        mine = blocks.filter(pc.equal(blocks.column("bucket"), bucket))
+        got = pa.Table.from_batches(list(dec(iter(mine.to_batches()))))
+        assert got.equals(t)
