@@ -644,6 +644,39 @@ def _decode_column(blob: bytes, kind: str, n: int, arrow_type,
     return out
 
 
+def _block_cols(desc: str) -> dict:
+    """A block descriptor's per-column entries by column name — the one
+    place the ``desc`` JSON is read. An entry carries the column's
+    kind ``k``, payload slice ``(o, l)``, codec ``c``, nullable flag
+    ``z`` and its stats."""
+    return {d["n"]: d for d in json.loads(desc)["cols"]}
+
+
+def _decode_block(cols: dict, payload: bytes, n: int,
+                  schema) -> list["pa.Array"]:
+    """Decode the columns of one block that the arrow ``schema`` names,
+    in its order. Each column's blob is the payload slice at its
+    descriptor ``(o, l)``, so unnamed columns' bytes are never touched.
+    A column the block predates (added to the table after it was
+    written) null-fills: Iceberg add-column semantics.
+
+    ``_decode_column`` resolves through this module's globals at call
+    time, so a wrapper assigned to ``engine._decode_column`` sees every
+    block decode."""
+    import pyarrow as pa
+
+    out = []
+    for field in schema:
+        d = cols.get(field.name)
+        if d is None:
+            out.append(pa.nulls(n, type=field.type))
+            continue
+        out.append(_decode_column(payload[d["o"]:d["o"] + d["l"]],
+                                  d["k"], n, field.type,
+                                  nullable=bool(d.get("z"))))
+    return out
+
+
 def _block_arrow_schema():
     import pyarrow as pa
     return pa.schema([
@@ -1327,34 +1360,20 @@ def make_decode_fn(kinds: list[tuple[str, str]], arrow_schema_bytes: bytes,
         import pyarrow as pa
 
         out_schema = pa.ipc.read_schema(pa.py_buffer(arrow_schema_bytes))
-        wanted = set(out_schema.names) - set(passthrough)
+        dec_schema = pa.schema([f for f in out_schema
+                                if f.name not in passthrough])
         for batch in batches:
             descs = batch.column("desc").to_pylist()
             payloads = batch.column("payload")
             ns = batch.column("n").to_pylist()
             for i in range(batch.num_rows):
-                desc = json.loads(descs[i])
-                payload = payloads[i].as_py()
                 n = int(ns[i])
-                by_name = {d["n"]: d for d in desc["cols"]
-                           if d["n"] in wanted}
-                cols = []
-                for field in out_schema:
-                    if field.name in by_name:
-                        d = by_name[field.name]
-                        blob = payload[d["o"]:d["o"] + d["l"]]
-                        cols.append(_decode_column(
-                            blob, d["k"], n, field.type,
-                            nullable=bool(d.get("z"))))
-                    elif field.name in wanted:
-                        # schema evolution: a column ADDED after this
-                        # block was written — null-fill (Iceberg
-                        # add-column semantics; old data has no value)
-                        cols.append(pa.nulls(n, type=field.type))
-                    else:  # block-level passthrough, replicated n times
-                        cols.append(pa.repeat(
-                            batch.column(field.name)[i], n)
-                            .cast(field.type))
+                cols = _decode_block(_block_cols(descs[i]),
+                                     payloads[i].as_py(), n, dec_schema)
+                # block-level passthrough, replicated n times
+                cols += [pa.repeat(batch.column(p)[i], n)
+                         .cast(out_schema.field(p).type)
+                         for p in passthrough]
                 yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
     return decode_blocks
@@ -1834,8 +1853,14 @@ def _overlap_cond(blocks: DataFrame, lo, hi):
     if "key_lo" in blocks.columns:
         cond = (F.col("key_lo") <= hi) & (F.col("key_hi") >= lo)
         return F.col("key_lo").isNull() | cond
-    blo = F.col("key_min").try_cast("long")  # null (not error) if non-numeric
-    bhi = F.col("key_max").try_cast("long")
+    # try_cast: a non-numeric legacy bound is null (keep), not an error
+    return _bounds_keep(F.col("key_min").try_cast("long"),
+                        F.col("key_max").try_cast("long"), lo, hi)
+
+
+def _bounds_keep(blo, bhi, lo, hi):
+    """Keep a block unless its (blo, bhi) bounds prove no value lies
+    in [lo, hi]; a NULL bound cannot prove it."""
     return blo.isNull() | bhi.isNull() | ((blo <= hi) & (bhi >= lo))
 
 
@@ -1938,16 +1963,8 @@ def range_scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     not requested), filter to the exact range. At scale this reads
     only the row groups whose key ranges overlap — the blocks-table
     analogue of partition pruning + parquet predicate pushdown."""
-    decode_cols = columns
-    if columns is not None and key_col not in columns:
-        decode_cols = [key_col] + columns
-    dec = decode_df(prune_blocks_range(blocks, lo, hi), schema_kinds,
-                    columns=decode_cols)
-    dec = dec.filter((F.col(key_col) >= _key_lit(schema_kinds, key_col, lo))
-                     & (F.col(key_col) <= _key_lit(schema_kinds, key_col, hi)))
-    if columns is not None and key_col not in columns:
-        dec = dec.select(*columns)
-    return dec
+    return _split_scan(blocks, schema_kinds, [(key_col, lo, hi)], columns,
+                       lead=True)
 
 
 def _contained_cond(blocks: DataFrame, lo, hi):
@@ -1977,24 +1994,14 @@ def range_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     range over a big table, almost every surviving block is interior,
     so the count is answered from the manifest-grade metadata at
     parquet-scan speed."""
-    if not isinstance(lo, str):
-        lo, hi = int(lo), int(hi)
-    ov = prune_blocks_range(blocks, lo, hi)
-    inside = _contained_cond(ov, lo, hi)
-    contained = ov.filter(inside).select(F.col("n").alias("_c"))
-    partial = ov.filter(~inside)
-    boundary = (decode_df(partial, schema_kinds, columns=[key_col])
-                .filter((F.col(key_col) >= _key_lit(schema_kinds, key_col, lo))
-                        & (F.col(key_col) <= _key_lit(schema_kinds, key_col, hi)))
-                .select(F.lit(1).cast("long").alias("_c")))
-    return (contained.unionByName(boundary)
-            .agg(F.coalesce(F.sum("_c"), F.lit(0)).cast("long")
-                 .alias("n_rows")))
+    return _split_count(blocks, schema_kinds, [(key_col, lo, hi)],
+                        lead=True)
 
 
 _STATS_JSON_SCHEMA = T.StructType([T.StructField("cols", T.ArrayType(
     T.StructType([
         T.StructField("n", T.StringType()),
+        T.StructField("c", T.StringType()),    # codec name
         T.StructField("lo", T.LongType()),
         T.StructField("hi", T.LongType()),
         T.StructField("s", T.LongType()),
@@ -2024,31 +2031,8 @@ def range_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     in the int64 codec domain. At 100 TB a wide range is almost all
     interior blocks, so the answer streams from the parquet metadata
     columns at scan speed."""
-    if not isinstance(lo, str):
-        lo, hi = int(lo), int(hi)
-    ov = prune_blocks_range(blocks, lo, hi)
-    stats = _col_stats(agg_col)
-    has_stats = (stats["lo"].isNotNull() & stats["hi"].isNotNull()
-                 & stats["s"].isNotNull())
-    inside = _contained_cond(ov, lo, hi) & has_stats
-    interior = ov.filter(inside).select(
-        F.col("n").alias("_c"), stats["s"].alias("_s"),
-        stats["lo"].alias("_lo"), stats["hi"].alias("_hi"))
-    partial = ov.filter(~inside)
-    agg_kind = dict(schema_kinds)[agg_col]
-    _check_agg_kind("range_agg", agg_kind)
-    v = _int_domain_expr(agg_kind, F.col(agg_col))
-    dec_cols = [key_col] if agg_col == key_col else [key_col, agg_col]
-    boundary = (decode_df(partial, schema_kinds, columns=dec_cols)
-                .filter((F.col(key_col) >= _key_lit(schema_kinds, key_col, lo))
-                        & (F.col(key_col) <= _key_lit(schema_kinds, key_col, hi)))
-                .select(F.lit(1).cast("long").alias("_c"), v.alias("_s"),
-                        v.alias("_lo"), v.alias("_hi")))
-    return (interior.unionByName(boundary).agg(
-        F.coalesce(F.sum("_c"), F.lit(0)).cast("long").alias("n_rows"),
-        F.sum("_s").cast("long").alias("sum_v"),
-        F.min("_lo").cast("long").alias("min_v"),
-        F.max("_hi").cast("long").alias("max_v")))
+    return _split_agg(blocks, schema_kinds, [(key_col, lo, hi)], agg_col,
+                      "range_agg", lead=True)
 
 
 def _col_stats(agg_col: str):
@@ -2331,19 +2315,7 @@ def scan_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     String columns prune the same way via the lexicographic
     (slo, shi) per-column bounds (pass string ``lo``/``hi``); declared
     text/payload columns carry no bounds and degrade to a full scan."""
-    blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-    keep = (blo.isNull() | bhi.isNull()
-            | ((blo <= hi) & (bhi >= lo)))
-    decode_cols = columns
-    if columns is not None and col not in columns:
-        decode_cols = [col] + columns
-    dec = decode_df(blocks.filter(keep), schema_kinds,
-                    columns=decode_cols)
-    dec = dec.filter((F.col(col) >= _key_lit(schema_kinds, col, lo))
-                     & (F.col(col) <= _key_lit(schema_kinds, col, hi)))
-    if columns is not None and col not in columns:
-        dec = dec.select(*columns)
-    return dec
+    return _split_scan(blocks, schema_kinds, [(col, lo, hi)], columns)
 
 
 def _where_bounds(blocks: DataFrame, col: str, lo, hi):
@@ -2374,37 +2346,105 @@ def count_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     event_id-keyed table) a wide predicate is answered almost entirely
     from metadata; on an uncorrelated column it degrades gracefully to
     the scan — never to a wrong answer."""
-    blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-    keep = blo.isNull() | bhi.isNull() | ((blo <= hi) & (bhi >= lo))
-    ov = blocks.filter(keep)
-    inside = F.coalesce((blo >= lo) & (bhi <= hi), F.lit(False))
-    contained = ov.filter(inside).select(F.col("n").alias("_c"))
-    boundary = (decode_df(ov.filter(~inside), schema_kinds,
-                          columns=[col])
-                .filter((F.col(col) >= _key_lit(schema_kinds, col, lo))
-                        & (F.col(col) <= _key_lit(schema_kinds, col, hi)))
-                .select(F.lit(1).cast("long").alias("_c")))
-    return (contained.unionByName(boundary)
-            .agg(F.coalesce(F.sum("_c"), F.lit(0)).cast("long")
-                 .alias("n_rows")))
+    return _split_count(blocks, schema_kinds, [(col, lo, hi)])
 
 
 def _multi_pred(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
-                preds: list[tuple]):
+                preds: list[tuple], lead: bool = False):
     """(block_keep, block_inside, row_filter, pred_cols) for an AND of
-    range predicates. keep/inside are JVM expressions over the desc
-    stats; row_filter is the exact post-decode predicate."""
+    range predicates ``[(col, lo, hi), ...]`` — the one zone-map split
+    every range/where operator runs. keep/inside are JVM expressions
+    over the block bounds; row_filter is the exact post-decode
+    predicate. With ``lead``, ``preds[0]`` is on the table's lead key
+    and prunes on its dedicated key bounds columns
+    (:func:`_overlap_cond` / :func:`_contained_cond`, parquet
+    pushable); every other predicate prunes on its column's stats
+    (:func:`_where_bounds`)."""
     keep = inside = row_f = None
-    for col, lo, hi in preds:
-        blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-        k = blo.isNull() | bhi.isNull() | ((blo <= hi) & (bhi >= lo))
-        ins = F.coalesce((blo >= lo) & (bhi <= hi), F.lit(False))
+    for i, (col, lo, hi) in enumerate(preds):
+        if lead and i == 0:
+            k = _overlap_cond(blocks, lo, hi)
+            ins = _contained_cond(blocks, lo, hi)
+        else:
+            blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
+            k = _bounds_keep(blo, bhi, lo, hi)
+            ins = F.coalesce((blo >= lo) & (bhi <= hi), F.lit(False))
         rf = ((F.col(col) >= _key_lit(schema_kinds, col, lo))
               & (F.col(col) <= _key_lit(schema_kinds, col, hi)))
         keep = k if keep is None else keep & k
         inside = ins if inside is None else inside & ins
         row_f = rf if row_f is None else row_f & rf
     return keep, inside, row_f, [c for c, _, _ in preds]
+
+
+def _split_scan(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+                preds: list[tuple], columns: Optional[list[str]] = None,
+                lead: bool = False) -> DataFrame:
+    """Rows matching ``preds``: decode only the kept blocks, then apply
+    the exact row filter. A ``columns`` projection decodes those
+    columns plus any predicate column they lack, which is trimmed from
+    the output."""
+    keep, _inside, row_f, pred_cols = _multi_pred(blocks, schema_kinds,
+                                                  preds, lead)
+    if columns is None:
+        return decode_df(blocks.filter(keep), schema_kinds).filter(row_f)
+    extra = [c for c in dict.fromkeys(pred_cols) if c not in columns]
+    dec = decode_df(blocks.filter(keep), schema_kinds,
+                    columns=extra + list(columns)).filter(row_f)
+    return dec.select(*columns) if extra else dec
+
+
+def _split_count(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+                 preds: list[tuple], lead: bool = False) -> DataFrame:
+    """COUNT(*) of the rows matching ``preds``, one row ``n_rows``:
+    kept blocks the bounds prove inside contribute their stored row
+    count ``n``; only the rest decode, and just the predicate
+    columns."""
+    keep, inside, row_f, pred_cols = _multi_pred(blocks, schema_kinds,
+                                                 preds, lead)
+    ov = blocks.filter(keep)
+    contained = ov.filter(inside).select(F.col("n").alias("_c"))
+    boundary = (decode_df(ov.filter(~inside), schema_kinds,
+                          columns=pred_cols)
+                .filter(row_f)
+                .select(F.lit(1).cast("long").alias("_c")))
+    return (contained.unionByName(boundary)
+            .agg(F.coalesce(F.sum("_c"), F.lit(0)).cast("long")
+                 .alias("n_rows")))
+
+
+def _split_agg(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
+               preds: list[tuple], agg_col: str, op: str,
+               lead: bool = False) -> DataFrame:
+    """(n_rows, sum_v, min_v, max_v) of ``agg_col`` over the rows
+    matching ``preds``, in the int64 codec domain. Kept blocks the
+    bounds prove inside answer from ``agg_col``'s stored (lo, hi, s)
+    stats; the rest (and blocks without those stats) decode just the
+    predicate and aggregate columns. ``op`` names the caller in the
+    kind error."""
+    keep, inside, row_f, pred_cols = _multi_pred(blocks, schema_kinds,
+                                                 preds, lead)
+    ov = blocks.filter(keep)
+    stats = _col_stats(agg_col)
+    inside = inside & (stats["lo"].isNotNull() & stats["hi"].isNotNull()
+                       & stats["s"].isNotNull())
+    interior = ov.filter(inside).select(
+        F.col("n").alias("_c"), stats["s"].alias("_s"),
+        stats["lo"].alias("_lo"), stats["hi"].alias("_hi"))
+    agg_kind = dict(schema_kinds)[agg_col]
+    _check_agg_kind(op, agg_kind)
+    v = _int_domain_expr(agg_kind, F.col(agg_col))
+    boundary = (decode_df(ov.filter(~inside), schema_kinds,
+                          columns=list(dict.fromkeys(pred_cols
+                                                     + [agg_col])))
+                .filter(row_f)
+                .select(F.lit(1).cast("long").alias("_c"), v.alias("_s"),
+                        v.alias("_lo"), v.alias("_hi")))
+    return (interior.unionByName(boundary).agg(
+        F.coalesce(F.sum("_c"), F.lit(0)).cast("long").alias("n_rows"),
+        F.sum("_s").cast("long").alias("sum_v"),
+        F.min("_lo").cast("long").alias("min_v"),
+        F.max("_hi").cast("long").alias("max_v")))
 
 
 def scan_where_multi(blocks: DataFrame,
@@ -2420,16 +2460,7 @@ def scan_where_multi(blocks: DataFrame,
     single-key layout it degrades to the best single predicate's
     pruning, never to a wrong answer (stat-less blocks are kept). One
     metadata filter, one decode of the surviving blocks."""
-    keep, _inside, row_f, pred_cols = _multi_pred(blocks, schema_kinds,
-                                                  preds)
-    decode_cols = columns
-    if columns is not None:
-        decode_cols = list(dict.fromkeys(pred_cols + list(columns)))
-    dec = decode_df(blocks.filter(keep), schema_kinds,
-                    columns=decode_cols).filter(row_f)
-    if columns is not None:
-        dec = dec.select(*columns)
-    return dec
+    return _split_scan(blocks, schema_kinds, preds, columns)
 
 
 def count_where_multi(blocks: DataFrame,
@@ -2441,17 +2472,7 @@ def count_where_multi(blocks: DataFrame,
     payload decode, blocks any predicate excludes are pruned, and only
     straddlers decode (just the predicate columns). One row out:
     ``n_rows``."""
-    keep, inside, row_f, pred_cols = _multi_pred(blocks, schema_kinds,
-                                                 preds)
-    ov = blocks.filter(keep)
-    contained = ov.filter(inside).select(F.col("n").alias("_c"))
-    boundary = (decode_df(ov.filter(~inside), schema_kinds,
-                          columns=pred_cols)
-                .filter(row_f)
-                .select(F.lit(1).cast("long").alias("_c")))
-    return (contained.unionByName(boundary)
-            .agg(F.coalesce(F.sum("_c"), F.lit(0)).cast("long")
-                 .alias("n_rows")))
+    return _split_count(blocks, schema_kinds, preds)
 
 
 def bloom_keep_cond(col: str, value, kind: str, field: str = "bm"):
@@ -2662,10 +2683,9 @@ def make_lookup_fn(kinds: list[tuple[str, str]], key_col: str, value,
             payloads = batch.column("payload")
             ns = batch.column("n").to_pylist()
             for i in range(batch.num_rows):
-                desc = json.loads(descs[i])
                 payload = payloads[i].as_py()
                 n = int(ns[i])
-                by_name = {d["n"]: d for d in desc["cols"]}
+                by_name = _block_cols(descs[i])
                 key_d = by_name.get(key_col)
                 if key_d is None:
                     # schema evolution: block predates the probe
@@ -2789,9 +2809,7 @@ def make_group_count_fn(col: str, arrow_schema_bytes: bytes):
             payloads = batch.column("payload")
             ns = batch.column("n").to_pylist()
             for i in range(batch.num_rows):
-                desc = json.loads(descs[i])
-                d = next((c for c in desc["cols"] if c["n"] == col),
-                         None)
+                d = _block_cols(descs[i]).get(col)
                 n = int(ns[i])
                 if d is None:
                     # schema evolution: the column was added after
@@ -2870,29 +2888,21 @@ def make_group_agg_fn(group_cols: list[str], agg_col: Optional[str],
         import pyarrow as pa
 
         out_schema = pa.ipc.read_schema(pa.py_buffer(arrow_schema_bytes))
-        need = list(group_cols) + ([agg_col] if agg_col else [])
+        # group columns decode to their output type, the aggregate
+        # column straight into int64
+        need = pa.schema(
+            [out_schema.field(i) for i in range(len(group_cols))]
+            + ([pa.field(agg_col, pa.int64())]
+               if agg_col and agg_col not in group_cols else []))
         for batch in batches:
             descs = batch.column("desc").to_pylist()
             payloads = batch.column("payload")
             ns = batch.column("n").to_pylist()
             for i in range(batch.num_rows):
-                desc = json.loads(descs[i])
-                by_name = {d["n"]: d for d in desc["cols"]}
-                payload = payloads[i].as_py()
-                n = int(ns[i])
-                cols = {}
-                for c in need:
-                    d = by_name.get(c)
-                    ftype = out_schema.field(
-                        group_cols.index(c)).type \
-                        if c in group_cols else pa.int64()
-                    if d is None:  # schema evolution: column added later
-                        cols[c] = pa.nulls(n, type=ftype)
-                        continue
-                    blob = payload[d["o"]:d["o"] + d["l"]]
-                    cols[c] = _decode_column(blob, d["k"], n, ftype,
-                                             nullable=bool(d.get("z")))
-                t = pa.table(cols)
+                t = pa.Table.from_arrays(
+                    _decode_block(_block_cols(descs[i]),
+                                  payloads[i].as_py(), int(ns[i]), need),
+                    schema=need)
                 if agg_col:
                     res = t.group_by(group_cols).aggregate(
                         [(agg_col, "sum"), (agg_col, "min"),
@@ -2977,32 +2987,8 @@ def agg_where(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     row out: (n_rows, sum_v, min_v, max_v) in the int64 codec domain.
     On a predicate correlated with block order a wide range is almost
     all interior blocks — answered at desc-scan speed."""
-    blo, bhi, lo, hi = _where_bounds(blocks, col, lo, hi)
-    keep = blo.isNull() | bhi.isNull() | ((blo <= hi) & (bhi >= lo))
-    ov = blocks.filter(keep)
-    stats = _col_stats(agg_col)
-    has_stats = (stats["lo"].isNotNull() & stats["hi"].isNotNull()
-                 & stats["s"].isNotNull())
-    inside = (F.coalesce((blo >= lo) & (bhi <= hi), F.lit(False))
-              & has_stats)
-    interior = ov.filter(inside).select(
-        F.col("n").alias("_c"), stats["s"].alias("_s"),
-        stats["lo"].alias("_lo"), stats["hi"].alias("_hi"))
-    agg_kind = dict(schema_kinds)[agg_col]
-    _check_agg_kind("agg_where", agg_kind)
-    v = _int_domain_expr(agg_kind, F.col(agg_col))
-    dec_cols = [col] if agg_col == col else [col, agg_col]
-    boundary = (decode_df(ov.filter(~inside), schema_kinds,
-                          columns=dec_cols)
-                .filter((F.col(col) >= _key_lit(schema_kinds, col, lo))
-                        & (F.col(col) <= _key_lit(schema_kinds, col, hi)))
-                .select(F.lit(1).cast("long").alias("_c"), v.alias("_s"),
-                        v.alias("_lo"), v.alias("_hi")))
-    return (interior.unionByName(boundary).agg(
-        F.coalesce(F.sum("_c"), F.lit(0)).cast("long").alias("n_rows"),
-        F.sum("_s").cast("long").alias("sum_v"),
-        F.min("_lo").cast("long").alias("min_v"),
-        F.max("_hi").cast("long").alias("max_v")))
+    return _split_agg(blocks, schema_kinds, [(col, lo, hi)], agg_col,
+                      "agg_where")
 
 
 # lookup_join block-prune grid: the bucket width is the AVERAGE block
@@ -3342,18 +3328,6 @@ def topk_by(blocks: DataFrame, schema_kinds: list[tuple[str, str]],
     return out
 
 
-def pruned_lookup(df: DataFrame, key_col: str, value: int,
-                  n_buckets: int = 8, block_rows: int = 4096) -> DataFrame:
-    """Metadata-pruned point lookup over a source DataFrame: encode,
-    then :func:`lookup` against the blocks. (For repeated lookups,
-    persist the blocks table once and call :func:`lookup` directly —
-    see the pruned_lookup_events query.)"""
-    kinds = column_kinds(df.schema)
-    blocks = encode_df(df, [key_col], n_buckets=n_buckets,
-                       block_rows=block_rows)
-    return lookup(blocks, kinds, key_col, value)
-
-
 def manifest_rows(blocks: DataFrame, snapshot_id: str, run_id: str) -> DataFrame:
     """Per-bucket lineage rollup (north rule: snapshot-id, partition
     bounds, codec histogram, bytes in/out)."""
@@ -3384,8 +3358,4 @@ def manifest_rows(blocks: DataFrame, snapshot_id: str, run_id: str) -> DataFrame
 
 def _codec_entries(desc_col):
     """Extract the per-column codec names from the desc JSON."""
-    return F.from_json(
-        desc_col,
-        T.StructType([T.StructField("cols", T.ArrayType(T.StructType([
-            T.StructField("c", T.StringType())])))]),
-    )["cols"]["c"]
+    return F.from_json(desc_col, _STATS_JSON_SCHEMA)["cols"]["c"]

@@ -112,20 +112,6 @@ def _symbol_arrays(table: list[bytes]):
     return out
 
 
-def _orbit(nxt: np.ndarray, n: int) -> np.ndarray:
-    """Positions visited by iterating pos -> nxt[pos] from 0 (pointer
-    doubling: round i appends the next 2^i orbit elements)."""
-    pos = np.array([0], dtype=np.int64)
-    jump = nxt
-    while pos[-1] < n:
-        pos = np.concatenate([pos, jump[pos]])
-        if len(pos) > n + 1:
-            break
-        jump = jump[jump]
-    past = np.flatnonzero(pos >= n)
-    return pos[: past[0]] if len(past) else pos
-
-
 SEGMENT = 1 << 16  # cache-blocked encode: per-segment working set ~2 MB
 
 

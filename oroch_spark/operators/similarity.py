@@ -48,25 +48,6 @@ def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
               .limit(k))
 
 
-def rp_lsh_buckets(df: DataFrame, dim: int, n_planes: int = 16,
-                   seed: int = 42, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
-    """Random-hyperplane LSH bucket id per vector: sign pattern of
-    ``n_planes`` fixed projections, packed into a long. Vectors in the
-    same bucket are ANN candidates; at scale, join/group within
-    buckets replaces the quadratic scan."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    bucket = None
-    for i in range(n_planes):
-        p = F.array(*[F.lit(float(x)).cast("float") for x in planes[i]])
-        bit = F.when(_dot(F.col(vec_col), p) > 0,
-                     F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                         F.lit(0).cast("long"))
-        bucket = bit if bucket is None else bucket.bitwiseOR(bit)
-    return df.select(id_col, vec_col, bucket.alias("bucket"))
-
-
 def _as_matrix(vecs) -> np.ndarray:
     """pandas Series of fixed-dim vectors -> (n, dim) float64 matrix."""
     return np.array([np.asarray(v, dtype=np.float64)
@@ -79,8 +60,8 @@ def lsh_buckets_udf(df: DataFrame, planes: np.ndarray,
     """Multi-table random-hyperplane buckets via ONE Arrow-batched
     pandas UDF: ``planes`` has shape (tables, planes_per_table, dim);
     each row gets an array of ``tables`` bucket ids from a single
-    (batch x tables*planes) matmul. This is the scale path the
-    expression-tree variant (:func:`rp_lsh_buckets`) cannot reach: the
+    (batch x tables*planes) matmul. This is the scale path a Spark
+    expression tree (one literal array per plane) cannot reach: the
     plane matrix ships once in the UDF closure (O(T*P*dim) — KBs),
     not as thousands of literals in the plan."""
     from pyspark.sql.functions import pandas_udf
@@ -416,27 +397,6 @@ def ann_topk_lsh_multi(df: DataFrame, query_vec: list[float], k: int = 10,
         c = F.element_at("buckets", t + 1) == F.lit(qb[t])
         cond = c if cond is None else cond | c
     cand = bucketed.filter(cond)
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
-
-
-def ann_topk_lsh(df: DataFrame, query_vec: list[float], k: int = 10,
-                 n_planes: int = 8, seed: int = 42,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 probe_hamming: int = 1) -> DataFrame:
-    """Approximate top-k: score only vectors whose LSH bucket is within
-    ``probe_hamming`` bits of the query's bucket (multi-probe)."""
-    dim = len(query_vec)
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    qbits = 0
-    for i in range(n_planes):
-        if float(np.dot(planes[i], query_vec)) > 0:
-            qbits |= 1 << i
-    probes = {qbits}
-    if probe_hamming >= 1:
-        probes |= {qbits ^ (1 << i) for i in range(n_planes)}
-    buckets = rp_lsh_buckets(df, dim, n_planes, seed, id_col, vec_col)
-    cand = buckets.filter(F.col("bucket").isin(list(probes)))
     return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 

@@ -906,7 +906,7 @@ class OrochReader(DataSourceReader):
         keep_rows: list[tuple[int, dict]] = []
         preds = partition.preds
         for i in range(meta.num_rows):
-            desc = None
+            cols = None
             keep = True
             for col, pred in preds.items():
                 # null-count stats are worth a descriptor parse only
@@ -929,9 +929,9 @@ class OrochReader(DataSourceReader):
                         break
                     if not nullish:
                         continue
-                if desc is None:
-                    desc = json.loads(descs[i])
-                d = next((c for c in desc["cols"] if c["n"] == col), None)
+                if cols is None:
+                    cols = engine._block_cols(descs[i])
+                d = cols.get(col)
                 if d is None:
                     # schema evolution: column absent => all rows null,
                     # which fail every null-rejecting op (=, IN, range,
@@ -970,29 +970,19 @@ class OrochReader(DataSourceReader):
                     keep = False
                     break
             if keep:
-                if desc is None:
-                    desc = json.loads(descs[i])
-                keep_rows.append((i, desc))
+                if cols is None:
+                    cols = engine._block_cols(descs[i])
+                keep_rows.append((i, cols))
         if not keep_rows:
             return
         payloads = pf.read_row_group(partition.row_group,
                                      columns=["payload"]) \
             .column("payload")
-        for i, desc in keep_rows:
-            by_name = {d["n"]: d for d in desc["cols"]}
-            payload = payloads[i].as_py()
-            n = int(n_arr[i])
-            arrs = []
-            for field in out_schema:
-                d = by_name.get(field.name)
-                if d is None:  # schema evolution: null-fill
-                    arrs.append(pa.nulls(n, type=field.type))
-                    continue
-                blob = payload[d["o"]:d["o"] + d["l"]]
-                arrs.append(engine._decode_column(
-                    blob, d["k"], n, field.type,
-                    nullable=bool(d.get("z"))))
-            batch = pa.RecordBatch.from_arrays(arrs, schema=out_schema)
+        for i, cols in keep_rows:
+            batch = pa.RecordBatch.from_arrays(
+                engine._decode_block(cols, payloads[i].as_py(),
+                                     int(n_arr[i]), out_schema),
+                schema=out_schema)
             if preds:
                 batch = self._exact_filter(batch, preds)
             if batch.num_rows:
@@ -1094,20 +1084,10 @@ class OrochReader(DataSourceReader):
             payloads = pf.read_row_group(
                 rg, columns=["payload"]).column("payload")
             for i in keep:
-                desc = json.loads(descs[i])
-                by_name = {d["n"]: d for d in desc["cols"]}
-                payload = payloads[i].as_py()
                 n = int(ns[i])
-                arrs = []
-                for field in dec_schema:
-                    d = by_name.get(field.name)
-                    if d is None:  # schema evolution: null-fill
-                        arrs.append(pa.nulls(n, type=field.type))
-                        continue
-                    blob = payload[d["o"]:d["o"] + d["l"]]
-                    arrs.append(engine._decode_column(
-                        blob, d["k"], n, field.type,
-                        nullable=bool(d.get("z"))))
+                arrs = engine._decode_block(
+                    engine._block_cols(descs[i]), payloads[i].as_py(), n,
+                    dec_schema)
                 arrs.append(pa.repeat(pa.scalar(int(bid),
                                                 type=pa.int64()), n))
                 batches.append(pa.RecordBatch.from_arrays(
@@ -1831,20 +1811,11 @@ class OrochStreamReader(DataSourceStreamReader):
         descs = tbl.column("desc").to_pylist()
         payloads = tbl.column("payload")
         for i in range(tbl.num_rows):
-            desc = json.loads(descs[i])
-            by_name = {d["n"]: d for d in desc["cols"]}
-            payload = payloads[i].as_py()
-            arrs = []
-            for field in out_schema:
-                d = by_name.get(field.name)
-                if d is None:  # schema evolution: null-fill
-                    arrs.append(pa.nulls(int(ns[i]), type=field.type))
-                    continue
-                blob = payload[d["o"]:d["o"] + d["l"]]
-                arrs.append(engine._decode_column(
-                    blob, d["k"], int(ns[i]), field.type,
-                    nullable=bool(d.get("z"))))
-            yield pa.RecordBatch.from_arrays(arrs, schema=out_schema)
+            yield pa.RecordBatch.from_arrays(
+                engine._decode_block(engine._block_cols(descs[i]),
+                                     payloads[i].as_py(), int(ns[i]),
+                                     out_schema),
+                schema=out_schema)
 
     def commit(self, end: dict) -> None:
         pass  # manifests are permanent; the stream checkpoint is enough

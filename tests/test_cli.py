@@ -11,6 +11,8 @@ import pytest
 import cli
 from oroch_spark import engine, transcripts
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture(scope="module")
 def src_dir(spark, tmp_path_factory):
@@ -27,7 +29,7 @@ def _ns(spark=None, **kw):
 
 
 def test_zip_contains_package(tmp_path):
-    out = cli.make_zip("/root/repo")
+    out = cli.make_zip(REPO)
     names = zipfile.ZipFile(out).namelist()
     assert "oroch_spark/engine.py" in names
     assert "oroch_spark/kernels/integers.py" in names
@@ -261,13 +263,13 @@ def test_real_spark_submit_pyfiles(tmp_path, src_dir):
     import shutil
     import subprocess
 
-    zip_path = cli.make_zip("/root/repo")
+    zip_path = cli.make_zip(REPO)
     out = str(tmp_path / "enc")
     base = [shutil.which("spark-submit") or "spark-submit",
             "--master", "local[4]",
             "--conf", "spark.sql.shuffle.partitions=8",
             "--conf", "spark.ui.enabled=false",
-            "--py-files", zip_path, "/root/repo/cli.py"]
+            "--py-files", zip_path, os.path.join(REPO, "cli.py")]
     env = {k: v for k, v in os.environ.items()
            if k not in ("PYTHONPATH",)}  # the zip must be enough
     r = subprocess.run(

@@ -53,24 +53,30 @@ def main() -> None:
         engine.prune_blocks_in(
             evb, [3, 777, 4242, 9999, 12000, 55555, 70000, 99999])
         .count())
+
+    def split(blocks, kinds, preds, lead=False):
+        """(kept, boundary) block counts of the zone-map split the
+        range/where operators run: scans decode every kept block,
+        counts and aggregates only the boundary ones (kept, but not
+        provably inside the predicate)."""
+        keep, inside, _rf, _pc = engine._multi_pred(blocks, kinds, preds,
+                                                    lead)
+        ov = blocks.filter(keep)
+        return ov.count(), ov.filter(~inside).count()
+
     add("range_scan (0.1% of key space)", "event_id in [1000, 1100]",
-        total, engine.prune_blocks_range(evb, 1000, 1100).count())
-    n_rows_total = int(evb.agg(F.sum("n")).collect()[0][0])
-    ov = engine.prune_blocks_range(evb, 500, 75000)
-    interior = ov.filter(engine._contained_cond(ov, 500, 75000)).count()
+        total, split(evb, kinds, [("event_id", 1000, 1100)], lead=True)[0])
     add("range_count (75% of key space): blocks never DECODED",
         "interior blocks answer from metadata", total,
-        ov.count() - interior)
+        split(evb, kinds, [("event_id", 500, 75000)], lead=True)[1])
     # secondary zone map: ts correlates with event_id block order
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     lo = int(ev.agg(F.min(ts_us)).collect()[0][0])
     hi = int(ev.agg(F.max(ts_us)).collect()[0][0])
     cut = lo + (hi - lo) // 100
-    blo, bhi, l2, h2 = engine._where_bounds(evb, "ts", lo, cut)
     add("scan_where (secondary col, correlated)",
         "ts in first 1% of time range", total,
-        evb.filter(blo.isNull() | bhi.isNull()
-                   | ((blo <= h2) & (bhi >= l2))).count())
+        split(evb, kinds, [("ts", lo, cut)])[0])
     add("lookup_where (Bloom, PRESENT value)",
         "props = '{\"k\": 42}' — 1% of rows, so statistically present "
         "in ~every 512-row block; keeping them all is correct", total,
@@ -107,14 +113,13 @@ def main() -> None:
                                 block_rows=512) \
             .write.mode("overwrite").parquet(zb_dir)
     zb = spark.read.parquet(zb_dir).persist()
+    zkinds = engine.column_kinds(evi.schema)
     z_total = zb.count()
     u_hi = int(evi.approxQuantile("user_id", [0.1], 0.0)[0])
     v_hi = int(evi.approxQuantile("v_int", [0.1], 0.0)[0])
 
     def z_kept(blocks, col, lo, hi):
-        blo, bhi, l2, h2 = engine._where_bounds(blocks, col, lo, hi)
-        return blocks.filter(blo.isNull() | bhi.isNull()
-                             | ((blo <= h2) & (bhi >= l2))).count()
+        return split(blocks, zkinds, [(col, lo, hi)])[0]
 
     add("scan_where (z-ordered, col 1 of 2)",
         "user_id in lowest 10% of rows — uncorrelated with any single "
@@ -128,17 +133,13 @@ def main() -> None:
     # compound AND: on the z layout the per-column skips compose
     u30 = int(evi.approxQuantile("user_id", [0.3], 0.0)[0])
     v30 = int(evi.approxQuantile("v_int", [0.3], 0.0)[0])
-    zkinds = engine.column_kinds(evi.schema)
-    keep2, _i, _rf, _pc = engine._multi_pred(
-        zb, zkinds, [("user_id", 0, u30), ("v_int", 0, v30)])
+    both = [("user_id", 0, u30), ("v_int", 0, v30)]
     add("scan_where_multi (z-ordered, user_id AND value)",
         "both cols in lowest 30% of rows (~9% of rows match)", z_total,
-        zb.filter(keep2).count())
-    keep1, _i, _rf, _pc = engine._multi_pred(
-        evb, zkinds, [("user_id", 0, u30), ("v_int", 0, v30)])
+        split(zb, zkinds, both)[0])
     add("scan_where_multi (same AND, single-key layout — the contrast)",
         "both cols lowest 30% over the event_id-keyed table", total,
-        evb.filter(keep1).count())
+        split(evb, zkinds, both)[0])
 
     # --- transcripts (5.8M turns, string conv key) ----------------------
     src_dir = os.path.join(tempfile.gettempdir(),
@@ -157,8 +158,9 @@ def main() -> None:
             engine.prune_blocks(trb, "conv-00004242").count())
         add("range_scan (string key range)",
             "conv_id in ['conv-00001000','conv-00001099']", t_total,
-            engine.prune_blocks_range(trb, "conv-00001000",
-                                      "conv-00001099").count())
+            split(trb, engine.column_kinds(tr.schema),
+                  [("conv_id", "conv-00001000", "conv-00001099")],
+                  lead=True)[0])
 
         # token Blooms over the text column (grep_where)
         tt_dir = os.path.join(tempfile.gettempdir(),
